@@ -22,14 +22,17 @@ label propagation shuffles only (node, label) pairs, so each round moves
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pipeline_pyspark_etl_imdb_spark.operators.util import (
-    defer_checkpoint_release,
-    iterative_loop_conf,
-    record_prechk,
-    release_local_checkpoint,
+from pipeline_pyspark_etl_imdb_spark.operators.loop import (
+    converge,
+    fixed_rounds,
+    pinned_adjacency,
+    seed_nodes,
+    symmetrize,
 )
 
 
@@ -43,34 +46,14 @@ def connected_components(
     """(node, component) for every node in ``edges``; the component id is
     the minimum node id in the component. Raises if not converged within
     ``max_iter`` (pathologically deep graphs need large-star/small-star)."""
-    # symmetrize with ONE evaluation of the edge subtree: the edge list is
-    # usually an expensive candidate-pair computation (LSH/shingle self-
-    # join), and union(edges, edges.swapped) would execute that subtree
-    # twice — explode emits both orientations from a single pass
-    # REVERTED r10 experiment (kept for the record, see OPTIMIZATION_r10.md):
-    # the bfs/sssp-style restructure — stats job before pinning, sym pinned
-    # at a narrow loop-conf width, SHUFFLE_HASH co-partitioned rounds —
-    # measured SLOWER on the cascade graph (components stage 4.02 -> 4.86 s;
-    # the setup countDistinct pass and the narrow-width round probes cost
-    # more than the removed AQE stage jobs), and hints-only was a wash
-    # (3.4-4.0 old vs 3.6-3.7 hinted across four interleaved JVMs). The r9
-    # shape below stays: session-width pinned sym, AQE on, SMJ rounds.
     sym = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col(src_col).alias("a"), F.col(dst_col).alias("b")),
-                    F.struct(F.col(dst_col).alias("a"), F.col(src_col).alias("b")),
-                )
-            ).alias("e")
-        )
-        .select("e.a", "e.b")
+        symmetrize(edges, src_col, dst_col)
         # pin the persisted partitioning to the per-round join key: every
         # iteration joins on sym.a, and a persisted hash partitioning on
         # `a` (matching the session's shuffle-partition count) lets
         # EnsureRequirements skip re-shuffling the edge list each round —
         # only the small (node, label) side moves.
-        # repartition BEFORE distinct (r9): HashPartitioning(a) satisfies
+        # repartition BEFORE distinct: HashPartitioning(a) satisfies
         # the dedup aggregate's ClusteredDistribution((a, b)) — rows
         # equal on (a, b) share a, so one exchange serves both, where
         # distinct-then-repartition paid two
@@ -78,7 +61,6 @@ def connected_components(
         .dropDuplicates(["a", "b"])
         .persist()
     )
-    prev_stepped = None
     try:
         # round 1 fused into initialization: with label(u) = u, the first
         # propagation is just min(node, min neighbor) — one aggregation,
@@ -92,58 +74,29 @@ def connected_components(
             )
             .persist()
         )
-        for _ in range(max_iter):
+
+        def _propagate(labels: DataFrame, _) -> tuple[DataFrame, Column]:
             neighbor_min = (
                 sym.join(labels, sym.a == labels.node)
                 .groupBy(F.col("b").alias("node2"))
                 .agg(F.min("label").alias("nbr_label"))
             )
-            # localCheckpoint (eager) rather than persist: it also truncates
-            # lineage, so the logical plan stays O(1) per round instead of
-            # nesting every previous iteration (re-planning an N-round tree
-            # is quadratic driver time, and worse at real scale). The
-            # changed COUNT rides along as an observed metric (r9):
-            # CollectMetricsExec accumulates it during the checkpoint's own
-            # materialization, so the convergence check costs ZERO extra
-            # jobs per round (it was previously a second scan job over the
-            # materialized blocks — pure dispatch latency at any scale)
             new_label = F.least(
                 F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
             )
-            obs = Observation()
-            stepped = record_prechk(
-                labels.join(neighbor_min, labels.node == neighbor_min.node2, "left")
-                .select(
-                    "node",
-                    new_label.alias("new_label"),
-                    (new_label != F.col("label")).alias("changed"),
-                )
-                .observe(obs, F.count_if(F.col("changed")).alias("n_changed"))
-            ).localCheckpoint(eager=True)
-            new_labels = stepped.select("node", F.col("new_label").alias("label"))
-            changed = int(obs.get["n_changed"])
-            # release the previous round's blocks DETERMINISTICALLY: the
-            # initial frame is persisted (unpersist works); later rounds
-            # are local checkpoints, whose RDD-level blocks
-            # DataFrame.unpersist cannot free — release_local_checkpoint
-            # walks to the LogicalRDD (found r5; relying on the
-            # ContextCleaner left every round's node-sized block set
-            # cached until some future GC)
-            labels.unpersist()
-            if prev_stepped is not None:
-                release_local_checkpoint(prev_stepped)
-            prev_stepped = stepped
-            labels = new_labels
-            if changed == 0:
-                # the FINAL round's checkpoint backs the returned frame —
-                # release it at the harness's next release_tracked(), not
-                # here (before this, every call leaked one node-sized
-                # block set into the session for good)
-                defer_checkpoint_release(stepped)
-                return labels.select("node", F.col("label").alias("component"))
-        if prev_stepped is not None:
-            defer_checkpoint_release(prev_stepped)
-        raise RuntimeError(f"connected_components: no fixpoint in {max_iter} iterations")
+            stepped = labels.join(
+                neighbor_min, labels.node == neighbor_min.node2, "left"
+            ).select(
+                "node",
+                new_label.alias("label"),
+                (new_label != F.col("label")).alias("changed"),
+            )
+            return stepped, F.col("changed")
+
+        labels = converge(
+            labels, _propagate, name="connected_components", max_iter=max_iter
+        )
+        return labels.select("node", F.col("label").alias("component"))
     finally:
         sym.unpersist()
 
@@ -165,7 +118,6 @@ def dedup_canonical(
     return clustered.where(F.col(id_col) == F.col("component")).select(
         id_col, "component"
     )
-
 
 
 def label_propagation(
@@ -195,65 +147,38 @@ def label_propagation(
 
     The adjacency is symmetrized from a canonical (src < dst) edge list
     (both directions) so propagation is undirected."""
-    spark = edges.sparkSession
-    adj = (
-        edges.select(F.col("src").alias("node"), F.col("dst").alias("nbr"))
-        .unionAll(
-            edges.select(F.col("dst").alias("node"), F.col("src").alias("nbr"))
-        )
-        .persist()
+    adj, n, bcast = pinned_adjacency(
+        symmetrize(edges, "src", "dst", "node", "nbr"), "nbr", broadcast_max_nodes
     )
-    # ONE aggregate job yields both setup statistics (r9; was a distinct
-    # count + a count = two passes over the cached adjacency)
-    row = adj.agg(
-        F.countDistinct("node").alias("n"), F.count("*").alias("m")
-    ).collect()[0]
-    n, m = int(row["n"]), int(row["m"])
-    bcast = n <= broadcast_max_nodes
-    shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    np_edges = max(4, min(shuffle_n, m // 200_000 + 1))
-    adj_p = adj.repartition(np_edges, "nbr").persist()
-    adj_p.count()
-    adj.unpersist()
+    labels = adj.select("node").distinct().select(
+        "node", F.col("node").alias("label")
+    )
 
-    # loop-state conf window (r9): per-round frames are node-domain rows
-    # (see util.iterative_loop_conf; no-op past the broadcast budget)
-    with iterative_loop_conf(spark, n, bcast=bcast):
-        labels = adj_p.select("node").distinct().select(
-            "node", F.col("node").alias("label")
+    def _vote(frames: list[DataFrame]) -> DataFrame:
+        l_side = frames[-1].select(F.col("node").alias("nbr"), "label")
+        if bcast:
+            l_side = F.broadcast(l_side)
+        votes = (
+            adj.join(l_side, "nbr")
+            .groupBy("node", "label")
+            .agg(F.count("*").alias("c"))
         )
-        intermediates = []
-        for _ in range(n_iter):
-            l_side = labels.select(F.col("node").alias("nbr"), "label")
-            if bcast:
-                l_side = F.broadcast(l_side)
-            votes = (
-                adj_p.join(l_side, "nbr")
-                .groupBy("node", "label")
-                .agg(F.count("*").alias("c"))
+        return (
+            votes.groupBy("node")
+            .agg(
+                F.max(
+                    F.struct(
+                        F.col("c").alias("c"), (-F.col("label")).alias("neg")
+                    )
+                ).alias("__m")
             )
-            new_labels = (
-                votes.groupBy("node")
-                .agg(
-                    F.max(
-                        F.struct(
-                            F.col("c").alias("c"), (-F.col("label")).alias("neg")
-                        )
-                    ).alias("__m")
-                )
-                .select("node", (-F.col("__m.neg")).alias("label"))
-            )
-            labels = record_prechk(new_labels).localCheckpoint(eager=False)
-            intermediates.append(labels)
-        labels.count()
-    adj_p.unpersist()
-    # checkpoint blocks are RDD-level (DataFrame.unpersist is a no-op on
-    # them); free every round's blocks except the returned frame's, which
-    # the harness frees at its next release_tracked()
-    for inter in intermediates:
-        if inter is not labels:
-            release_local_checkpoint(inter)
-    defer_checkpoint_release(labels)
+            .select("node", (-F.col("__m.neg")).alias("label"))
+        )
+
+    labels = fixed_rounds(
+        labels, _vote, n_iter, name="label_propagation", rows=n, bcast=bcast
+    )[-1]
+    adj.unpersist()
     return labels.select("node", F.col("label").alias("community"))
 
 
@@ -284,79 +209,32 @@ def bfs_hops(
     lineage; ONE action materializes the chain before the adjacency cache
     releases. Per-round bytes moved: (frontier + new-node) ids, never
     edges, never payloads."""
-    adj0 = (
-        edges.select(F.col("src").alias("node"), F.col("dst").alias("nbr"))
-        .unionAll(
-            edges.select(F.col("dst").alias("node"), F.col("src").alias("nbr"))
-        )
-        .persist()
+    adj, n, bcast = pinned_adjacency(
+        symmetrize(edges, "src", "dst", "node", "nbr"), "node", broadcast_max_nodes
     )
-    row = adj0.agg(
-        F.countDistinct("node").alias("n"), F.count("*").alias("m")
-    ).collect()[0]
-    n, m = int(row["n"]), int(row["m"])
-    bcast = n <= broadcast_max_nodes
-    spark = edges.sparkSession
-    shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    np_edges = max(4, min(shuffle_n, m // 200_000 + 1))
-    adj = adj0.repartition(np_edges, "node").persist()
-    adj.count()
-    adj0.unpersist()
+    hop0 = seed_nodes(adj, seeds).select("node", F.lit(0).cast("int").alias("hops"))
 
-    if seeds is None:
-        # the 1-row min aggregate yields (NULL) on an EMPTY graph — filter
-        # it so the result is zero rows, not a phantom (NULL, 0) row (the
-        # permutation-test empty-shape discipline; mirrored in _bfs_sql)
-        seeds = adj.agg(F.min("node").alias("node")).where(
-            F.col("node").isNotNull()
+    def _expand(frontiers: list[DataFrame]) -> DataFrame:
+        f_side = frontiers[-1].select("node")
+        if bcast:
+            f_side = F.broadcast(f_side)
+        nbrs = (
+            adj.join(f_side, "node")
+            .select(F.col("nbr").alias("node"))
+            .distinct()
         )
-    else:
-        # a caller-supplied seeds frame is untrusted: duplicate seed ids
-        # would emit duplicate (node, 0) rows (and double every later
-        # anti-join's "seen" semantics held only by accident). Seed ids
-        # absent from the edge set are KEPT by design — they appear at
-        # hop 0 with no reachable neighbors, the standard multi-source
-        # BFS contract for isolated sources.
-        seeds = seeds.select("node").distinct()
-    # hop 0 is checkpointed like every later round: its lineage reaches
-    # through adj into the CALLER'S edge subtree (often an expensive
-    # self-join), and the final action on the returned union would
-    # otherwise rebuild that subtree after adj.unpersist() below just to
-    # recompute this one frame.
-    # loop-state conf window (r9): per-round frames are node-domain rows
-    # (see util.iterative_loop_conf; no-op past the broadcast budget)
-    with iterative_loop_conf(spark, n, bcast=bcast):
-        frontier = defer_checkpoint_release(
-            record_prechk(seeds.select("node", F.lit(0).cast("int").alias("hops")))
-            .localCheckpoint(eager=False)
+        seen = reduce(DataFrame.unionByName, frontiers).select("node")
+        if bcast:
+            seen = F.broadcast(seen)
+        return nbrs.join(seen, "node", "left_anti").select(
+            "node", F.lit(len(frontiers)).cast("int").alias("hops")
         )
-        dist = frontier
-        for h in range(1, max_hops + 1):
-            f_side = frontier.select("node")
-            if bcast:
-                f_side = F.broadcast(f_side)
-            nbrs = (
-                adj.join(f_side, "node")
-                .select(F.col("nbr").alias("node"))
-                .distinct()
-            )
-            seen = dist.select("node")
-            if bcast:
-                seen = F.broadcast(seen)
-            frontier = defer_checkpoint_release(
-                record_prechk(
-                    nbrs.join(seen, "node", "left_anti")
-                    .select("node", F.lit(h).cast("int").alias("hops"))
-                ).localCheckpoint(eager=False)
-            )
-            dist = dist.unionByName(frontier)
-        dist.count()
+
+    frontiers = fixed_rounds(
+        hop0, _expand, max_hops, name="bfs_hops", rows=n, bcast=bcast, keep_all=True
+    )
     adj.unpersist()
-    # every frontier checkpoint feeds the RETURNED union, so none can be
-    # released here — all are registered for the harness's next
-    # release_tracked() (the reference-drop story was wrong: checkpoint
-    # blocks are pinned at the RDD level and NEVER free on their own)
-    return dist.select("node", "hops")
+    return reduce(DataFrame.unionByName, frontiers).select("node", "hops")
 
 
 def sssp_bounded(
@@ -395,86 +273,54 @@ def sssp_bounded(
     payloads. At 100 TB: adjacency stays partitioned in place; the dist
     frame is node-domain-sized.
     """
-    w = F.col(weight_col).cast("long")
-    adj0 = (
-        edges.select(F.col("src").alias("node"), F.col("dst").alias("nbr"), w.alias("w"))
-        .unionAll(
-            edges.select(
-                F.col("dst").alias("node"), F.col("src").alias("nbr"), w.alias("w")
-            )
-        )
-        .persist()
+    adj, n, bcast = pinned_adjacency(
+        symmetrize(
+            edges, "src", "dst", "node", "nbr", w=F.col(weight_col).cast("long")
+        ),
+        "node",
+        broadcast_max_nodes,
     )
-    row = adj0.agg(
-        F.countDistinct("node").alias("n"), F.count("*").alias("m")
-    ).collect()[0]
-    n, m = int(row["n"]), int(row["m"])
-    bcast = n <= broadcast_max_nodes
-    spark = edges.sparkSession
-    shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    np_edges = max(4, min(shuffle_n, m // 200_000 + 1))
-    adj = adj0.repartition(np_edges, "node").persist()
-    adj.count()
-    adj0.unpersist()
+    dist0 = seed_nodes(adj, seeds).select(
+        "node", F.lit(0).cast("long").alias("dist")
+    )
 
-    if seeds is None:
-        # empty graph -> the 1-row min aggregate is (NULL) -> zero rows,
-        # not a phantom (NULL, 0) row (the bfs_hops discipline)
-        seeds = adj.agg(F.min("node").alias("node")).where(
-            F.col("node").isNotNull()
+    def _relax(rounds: list[DataFrame]) -> DataFrame:
+        dist = rounds[-1].select("node", "dist")
+        # round 0 is the seed set, all of it frontier; later rounds carry
+        # the improved set the previous merge flagged
+        frontier = rounds[-1].where("__improved") if len(rounds) > 1 else dist
+        f_side = frontier.select("node", "dist")
+        if bcast:
+            f_side = F.broadcast(f_side)
+        cand = adj.join(f_side, "node").select(
+            F.col("nbr").alias("node"), (F.col("dist") + F.col("w")).alias("d")
         )
-    else:
-        seeds = seeds.select("node").distinct()
-    # loop-state conf window (r9): the per-round frames are node-domain
-    # rows, so the merge exchange runs at the frame-proportional width
-    # and without AQE's per-exchange stage jobs; no-op past the
-    # broadcast budget (see util.iterative_loop_conf)
-    with iterative_loop_conf(spark, n, bcast=bcast):
-        dist = defer_checkpoint_release(
-            record_prechk(seeds.select("node", F.lit(0).cast("long").alias("dist")))
-            .localCheckpoint(eager=False)
+        # merge = UNION ALL + one partial-aggregated min (the oracle's
+        # exact shape): a full-outer join can't broadcast in Spark, so
+        # this keeps the per-round merge to ONE node-domain shuffle with
+        # map-side combine — no join at all
+        return (
+            dist.select("node", F.col("dist").alias("d"), F.lit(True).alias("__old"))
+            .unionByName(cand.select("node", "d", F.lit(False).alias("__old")))
+            .groupBy("node")
+            .agg(
+                F.min("d").alias("dist"),
+                F.min(F.when(F.col("__old"), F.col("d"))).alias("__od"),
+            )
+            .select(
+                "node",
+                "dist",
+                (
+                    F.col("__od").isNull() | (F.col("dist") < F.col("__od"))
+                ).alias("__improved"),
+            )
         )
-        frontier = dist
-        for _ in range(n_rounds):
-            f_side = frontier
-            if bcast:
-                f_side = F.broadcast(f_side)
-            cand = (
-                adj.join(f_side, "node")
-                .select(
-                    F.col("nbr").alias("node"),
-                    (F.col("dist") + F.col("w")).alias("d"),
-                )
-            )
-            # merge = UNION ALL + one partial-aggregated min (the oracle's
-            # exact shape): a full-outer join can't broadcast in Spark, so
-            # this keeps the per-round merge to ONE node-domain shuffle with
-            # map-side combine — no join at all
-            merged = defer_checkpoint_release(
-                dist.select(
-                    "node", F.col("dist").alias("d"), F.lit(True).alias("__old")
-                )
-                .unionByName(cand.select("node", "d", F.lit(False).alias("__old")))
-                .groupBy("node")
-                .agg(
-                    F.min("d").alias("dist"),
-                    F.min(F.when(F.col("__old"), F.col("d"))).alias("__od"),
-                )
-                .select(
-                    "node",
-                    "dist",
-                    (
-                        F.col("__od").isNull() | (F.col("dist") < F.col("__od"))
-                    ).alias("__improved"),
-                )
-                .transform(record_prechk)
-                .localCheckpoint(eager=False)
-            )
-            frontier = merged.where("__improved").select("node", "dist")
-            dist = merged.select("node", "dist")
-        dist.count()
+
+    rounds = fixed_rounds(
+        dist0, _relax, n_rounds, name="sssp_bounded", rows=n, bcast=bcast, keep_all=True
+    )
     adj.unpersist()
-    return dist.select("node", "dist")
+    return rounds[-1].select("node", "dist")
 
 
 def bfs_label_budget(
@@ -505,76 +351,50 @@ def bfs_label_budget(
     materializes the chain. Integer-exact end to end, so the
     fixed-round result is engine-portable and the oracle unrolls the
     same rounds over state pairs (oracles._label_bfs_sql)."""
-    wcol = F.col(weak_col).cast("int")
-    adj0 = (
-        edges.select(
-            F.col("src").alias("node"), F.col("dst").alias("nbr"), wcol.alias("wk")
-        )
-        .unionAll(
-            edges.select(
-                F.col("dst").alias("node"), F.col("src").alias("nbr"), wcol.alias("wk")
-            )
-        )
-        .persist()
+    adj, rows, bcast = pinned_adjacency(
+        symmetrize(
+            edges, "src", "dst", "node", "nbr", wk=F.col(weak_col).cast("int")
+        ),
+        "node",
+        broadcast_max_nodes,
+        states_per_node=max_weak + 1,
     )
-    row = adj0.agg(
-        F.countDistinct("node").alias("n"), F.count("*").alias("m")
-    ).collect()[0]
-    n, m = int(row["n"]), int(row["m"])
-    bcast = n * (max_weak + 1) <= broadcast_max_nodes
-    spark = edges.sparkSession
-    shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    np_edges = max(4, min(shuffle_n, m // 200_000 + 1))
-    adj = adj0.repartition(np_edges, "node").persist()
-    adj.count()
-    adj0.unpersist()
+    # automaton start state: (seed, w=0) at hop 0
+    start = seed_nodes(adj, seeds).select(
+        "node", F.lit(0).cast("int").alias("w"), F.lit(0).cast("int").alias("hops")
+    )
 
-    if seeds is None:
-        seeds = adj.agg(F.min("node").alias("node")).where(
-            F.col("node").isNotNull()
-        )
-    else:
-        seeds = seeds.select("node").distinct()
-    # automaton start state: (seed, w=0) at hop 0.
-    # loop-state conf window (r9): per-round frames are state-domain rows
-    # ((max_weak+1) x nodes — the bcast predicate's own bound; see
-    # util.iterative_loop_conf; no-op past the broadcast budget)
-    with iterative_loop_conf(spark, n * (max_weak + 1), bcast=bcast):
-        frontier = defer_checkpoint_release(
-            record_prechk(
-                seeds.select(
-                    "node",
-                    F.lit(0).cast("int").alias("w"),
-                    F.lit(0).cast("int").alias("hops"),
-                )
-            ).localCheckpoint(eager=False)
-        )
-        seen = frontier
-        for h in range(1, max_hops + 1):
-            f_side = frontier.select("node", "w")
-            if bcast:
-                f_side = F.broadcast(f_side)
-            cand = (
-                adj.join(f_side, "node")
-                .select(
-                    F.col("nbr").alias("node"),
-                    (F.col("w") + F.col("wk")).alias("w"),
-                )
-                .where(F.col("w") <= max_weak)
-                .distinct()
+    def _expand(frontiers: list[DataFrame]) -> DataFrame:
+        f_side = frontiers[-1].select("node", "w")
+        if bcast:
+            f_side = F.broadcast(f_side)
+        cand = (
+            adj.join(f_side, "node")
+            .select(
+                F.col("nbr").alias("node"),
+                (F.col("w") + F.col("wk")).alias("w"),
             )
-            s_side = seen.select("node", "w")
-            if bcast:
-                s_side = F.broadcast(s_side)
-            frontier = defer_checkpoint_release(
-                record_prechk(
-                    cand.join(s_side, ["node", "w"], "left_anti")
-                    .select("node", "w", F.lit(h).cast("int").alias("hops"))
-                ).localCheckpoint(eager=False)
-            )
-            seen = seen.unionByName(frontier)
-        seen.count()
+            .where(F.col("w") <= max_weak)
+            .distinct()
+        )
+        s_side = reduce(DataFrame.unionByName, frontiers).select("node", "w")
+        if bcast:
+            s_side = F.broadcast(s_side)
+        return cand.join(s_side, ["node", "w"], "left_anti").select(
+            "node", "w", F.lit(len(frontiers)).cast("int").alias("hops")
+        )
+
+    frontiers = fixed_rounds(
+        start,
+        _expand,
+        max_hops,
+        name="bfs_label_budget",
+        rows=rows,
+        bcast=bcast,
+        keep_all=True,
+    )
     adj.unpersist()
+    seen = reduce(DataFrame.unionByName, frontiers)
     # collapse automaton states to the node answer: lexicographic
     # (hops, weak) min — first-reached hop, thriftiest budget at that hop
     best = F.min(F.struct(F.col("hops"), F.col("w"))).alias("__b")

@@ -23,8 +23,15 @@ operator against a pure-Python peel on the same fixture graph.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from pipeline_pyspark_etl_imdb_spark.operators.loop import (
+    converge,
+    node_partitions,
+    symmetrize,
+)
+from pipeline_pyspark_etl_imdb_spark.operators.util import tracked_persist
 
 
 def k_core(
@@ -47,100 +54,49 @@ def k_core(
     emits each a<b pair once) skip the symmetrize-dedup shuffle — the
     two emitted orientations of distinct pairs are distinct by
     construction."""
-    # one-pass symmetrize (same single-evaluation idiom as
-    # connected_components: the edge list is usually an expensive
-    # candidate-pair subtree — emit both orientations from one pass)
-    sym = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col(src_col).alias("a"), F.col(dst_col).alias("b")),
-                    F.struct(F.col(dst_col).alias("a"), F.col(src_col).alias("b")),
-                )
-            ).alias("e")
-        )
-        .select("e.a", "e.b")
-    )
+    sym = symmetrize(edges, src_col, dst_col)
     if not edges_distinct:
         sym = sym.distinct()
     sym = sym.repartition(F.col("a")).persist()
     # INCREMENTAL peel — iterate degrees, never edges: degrees aggregate
     # once from the pinned edge list; each later round subtracts only the
     # contributions of the nodes peeled THAT round (one broadcast join of
-    # edges against the tiny peeled list + a left join onto the 20k-row
-    # degree frame). Nothing edge-sized is ever rewritten: the first
-    # version localCheckpoint'ed the pruned edge list every round (10.1 s
-    # at sf0.1), a live-set semi-join variant re-aggregated all edges per
-    # round (5.7 s); this delta shape re-touches edges only where they
-    # meet a peeled node (~peel-front x degree rows a round, measured
-    # ~3 s). The materialized per-round state is the degree frame —
-    # node-domain-sized, the natural checkpoint unit. Size guard: a
-    # pathological peel front larger than broadcast_max_nodes falls back
-    # to a shuffle join — still linear in touched edges.
+    # edges against the tiny peeled list + a left join onto the
+    # node-domain degree frame). Nothing edge-sized is ever rewritten:
+    # edges are re-touched only where they meet a peeled node (~peel-front
+    # x degree rows a round). The materialized per-round state is the
+    # degree frame — node-domain-sized, the natural checkpoint unit. Size
+    # guard: a pathological peel front larger than broadcast_max_nodes
+    # falls back to a shuffle join — still linear in touched edges.
     broadcast_max_nodes = 10_000_000
-    # the below-k count rides along as an observed metric on every degree
-    # checkpoint (r9): CollectMetricsExec accumulates it during the
-    # checkpoint's own materialization, so the per-round "how many peel"
-    # check costs ZERO extra jobs (it was previously a count() job per
-    # round — pure dispatch latency at any scale)
-    obs = Observation()
-    from pipeline_pyspark_etl_imdb_spark.operators.util import record_prechk
-
-    deg = record_prechk(
-        sym.groupBy(F.col("a").alias("node"))
-        .agg(F.count("*").alias("degree"))
-        .observe(obs, F.count_if(F.col("degree") < k).alias("n_below"))
-    ).localCheckpoint(eager=True)
-    # frame-proportional partitioning (the pagerank discipline): the
-    # degree frame is node-domain-sized (8-16 B rows); coalescing its
-    # per-round checkpoints by row volume keeps the peel's many small
-    # stages from paying shuffle_n task launches each — at real scale
-    # the formula saturates at the session's shuffle width and the
-    # layout is unchanged
-    shuffle_n = int(
-        edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    n_nodes = deg.count()
-    np_deg = max(1, min(shuffle_n, n_nodes // 100_000 + 1))
-    deg = deg.coalesce(np_deg)
-    from pipeline_pyspark_etl_imdb_spark.operators.util import (
-        defer_checkpoint_release,
-        iterative_loop_conf,
-        release_local_checkpoint,
-    )
-
-    # loop-state conf window (r9): the peel's per-round frames are
-    # node-domain rows (see util.iterative_loop_conf; no-op past the
-    # broadcast budget). The window stays open across the whole peel —
-    # every returned frame is an eager checkpoint, so nothing outside
-    # compiles against the narrowed conf.
-    loop_window = iterative_loop_conf(
-        edges.sparkSession, n_nodes, bcast=n_nodes <= broadcast_max_nodes
-    )
-    loop_window.__enter__()
     try:
-        for _ in range(max_iter):
+        deg0 = tracked_persist(
+            sym.groupBy(F.col("a").alias("node")).agg(F.count("*").alias("degree"))
+        )
+        # ONE job materializes the degree frame and reads both the node
+        # count (sizes the loop) and the first peel front
+        row = deg0.agg(
+            F.count("*").alias("n"), F.count_if(F.col("degree") < k).alias("below")
+        ).collect()[0]
+        n_nodes = int(row["n"])
+        # frame-proportional partitioning: the degree frame is
+        # node-domain-sized (8-16 B rows); coalescing every round's degree
+        # frame by row volume keeps the peel's many small stages from
+        # paying shuffle_n task launches each
+        np_deg = node_partitions(edges.sparkSession, n_nodes)
+
+        def _peel(deg: DataFrame, n_peeled: int) -> tuple[DataFrame, Column]:
+            deg = deg.coalesce(np_deg)
             keep = deg.where(F.col("degree") >= k)
             peeled = deg.where(F.col("degree") < k).select("node")
-            n_peeled = int(obs.get["n_below"])
-            if n_peeled == 0:
-                # the final degree checkpoint backs the returned frame;
-                # the harness frees it at its next release_tracked()
-                defer_checkpoint_release(deg)
-                return keep.orderBy(F.desc("degree"), F.asc("node"))
-            prev_deg = deg
-            peeled_b = (
-                F.broadcast(peeled)
-                if n_peeled <= broadcast_max_nodes
-                else peeled
-            )
+            if n_peeled <= broadcast_max_nodes:
+                peeled = F.broadcast(peeled)
             delta = (
-                sym.join(peeled_b, sym.a == peeled_b.node)
+                sym.join(peeled, sym.a == peeled.node)
                 .groupBy(F.col("b").alias("node"))
                 .agg(F.count("*").alias("__d"))
             )
-            obs = Observation()
-            deg = record_prechk(
+            out = (
                 keep.join(delta, "node", "left")
                 .select(
                     "node",
@@ -148,16 +104,19 @@ def k_core(
                         F.col("degree") - F.coalesce(F.col("__d"), F.lit(0))
                     ).alias("degree"),
                 )
-                .observe(obs, F.count_if(F.col("degree") < k).alias("n_below"))
                 .coalesce(np_deg)
-            ).localCheckpoint(eager=True)
-            # the new eager checkpoint no longer depends on the previous
-            # round's blocks (RDD-level — DataFrame.unpersist can't free
-            # them); release so the peel holds ONE degree frame, not one
-            # per round
-            release_local_checkpoint(prev_deg)
-        defer_checkpoint_release(deg)
-        raise RuntimeError(f"k_core: no fixpoint in {max_iter} iterations")
+            )
+            return out, F.col("degree") < k
+
+        core = converge(
+            deg0,
+            _peel,
+            name="k_core",
+            max_iter=max_iter,
+            changed=int(row["below"]),
+            rows=n_nodes,
+            bcast=n_nodes <= broadcast_max_nodes,
+        )
+        return core.orderBy(F.desc("degree"), F.asc("node"))
     finally:
-        loop_window.__exit__(None, None, None)
         sym.unpersist()

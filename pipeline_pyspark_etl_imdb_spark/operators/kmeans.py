@@ -255,8 +255,8 @@ def lloyd_kmeans(
     # loop conf window (r9): each round's shuffle carries <= k rows per
     # input partition — model-sized, data-independent — so the narrow
     # width + paused AQE remove per-round stage-job latency (see
-    # util.iterative_loop_conf)
-    from pipeline_pyspark_etl_imdb_spark.operators.util import (
+    # loop.iterative_loop_conf)
+    from pipeline_pyspark_etl_imdb_spark.operators.loop import (
         iterative_loop_conf,
     )
 

@@ -27,7 +27,8 @@ tests/test_pagerank.py additionally bounds the values against an
 independent NumPy power iteration.
 
 ``tol`` adds an early exit: stop once max |Δrank| < tol (one extra
-small-frame join + scalar agg per round). The exit is deterministic for
+small-frame join per round; the count of nodes that moved by tol or more
+is observed during the round's own eager checkpoint). The exit is deterministic for
 a given engine — the NumPy gate applies the identical rule — and only
 ambiguous if a round's delta lands within float-noise of tol itself
 (geometric convergence makes that measure-zero in practice). NOTE,
@@ -41,12 +42,15 @@ rounds, see tests/test_pagerank.py::test_pagerank_tol_early_exit).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# rounds actually executed by the most recent pagerank() call — lets
-# tests assert the tol early-exit fired without changing the return type
-last_n_rounds: int = 0
+from pipeline_pyspark_etl_imdb_spark.operators.loop import (
+    converge,
+    edge_partitions,
+    fixed_rounds,
+    node_partitions,
+)
 
 
 def pagerank(
@@ -99,15 +103,9 @@ def pagerank(
         # oracle yields the same (every round CTE is empty)
         nodes0.unpersist()
         return nodes0.select("node", F.lit(None).cast("double").alias("rank"))
-    # frame-proportional partitioning: the rank/node frames are 2-3
-    # columns of ~20 B/row, the edge frame similar — sizing partitions by
-    # ROW VOLUME (capped at the session's shuffle width, floored for
-    # local parallelism) instead of inheriting shuffle_n everywhere is
-    # what keeps per-round stages from paying 32 task launches to move
-    # 16k rows; at real scale both formulas saturate at shuffle_n and
-    # the layout is identical to before
-    shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    np_nodes = max(1, min(shuffle_n, n // 100_000 + 1))
+    # frame-proportional partitioning (see loop.edge_partitions): the
+    # rank/node frames are 2-3 columns of ~20 B/row, the edge frame similar
+    np_nodes = node_partitions(spark, n)
     nodes = nodes0.coalesce(np_nodes)
     bcast = n <= broadcast_max_nodes
     # one shuffle up front; the pinned layout depends on how the rank
@@ -123,28 +121,25 @@ def pagerank(
     # evaluated ONCE: materialize at natural partitioning, size the
     # pinned layout from the measured count, repartition FROM CACHE.
     e_deg0 = e.join(out_deg, "src").persist()
-    n_edges = e_deg0.count()
-    ep_edges = max(4, min(shuffle_n, n_edges // 200_000 + 1))
+    ep_edges = edge_partitions(spark, e_deg0.count())
     edges_deg = e_deg0.repartition(ep_edges, "dst" if bcast else "src").persist()
     edges_deg.count()  # materialize once, outside the loop
     e_deg0.unpersist()
     if bcast:
-        # pin the node frame on hash(node) at the EDGE layout's width
-        # (r10): the per-round contribution aggregate inherits
+        # pin the node frame on hash(node) at the EDGE layout's width:
+        # the per-round contribution aggregate inherits
         # HashPartitioning(dst, ep_edges) from the pinned edge layout
         # (its groupBy is map-side complete), and after the dst->node
         # alias that is exactly this layout — so the per-round
         # nodes x contribs join runs as a ZERO-exchange co-partitioned
         # shuffled-hash join instead of building a fresh broadcast of
         # the contribution frame every round (one fewer broadcast-build
-        # job per round; the r9 co-partition attempt lost to SMJ's
-        # per-round sorts, which the SHUFFLE_HASH hint removes). One
-        # extra setup shuffle of the node-domain frame pays for it.
+        # job per round; the SHUFFLE_HASH hint keeps SMJ's per-round
+        # sorts out). One extra setup shuffle of the node-domain frame
+        # pays for it.
         nodes = nodes0.repartition(ep_edges, "node").persist()
         nodes.count()
 
-    global last_n_rounds
-    last_n_rounds = 0
     ranks = nodes.select("node", "dang", F.lit(1.0 / n).alias("rank"))
 
     def _step(r: DataFrame) -> DataFrame:
@@ -152,11 +147,8 @@ def pagerank(
         # LogicalRDD, so referencing it twice — contributions AND the
         # 1-row dangling aggregate — costs two scans of the NODE-sized
         # frame, not a recompute; carrying dm as a broadcast scalar frame
-        # removes the per-round driver collect() that used to force one
-        # Spark JOB per iteration (job launch overhead was ~0.5 s/round
-        # of the 10-round fixture's wall time; the whole fixed-count loop
-        # now materializes as ONE lazy checkpoint chain in the final
-        # action).
+        # needs no per-round driver collect(), so the fixed-count loop
+        # materializes as ONE lazy checkpoint chain in the final action.
         # coalesce: a graph with NO dangling nodes sums over an empty
         # frame -> NULL, which would NULL-poison every rank downstream
         dmf = r.where("dang").agg(
@@ -179,7 +171,7 @@ def pagerank(
             # hash(node) x ep_edges): the hint picks ShuffledHashJoin,
             # which with matching child partitioning plans NO exchange
             # and NO sort — replacing the old per-round broadcast build
-            # of the contribution frame (r10; see the nodes pin above)
+            # of the contribution frame (see the nodes pin above)
             c_side = c_side.hint("shuffle_hash")
         return (
             nodes.join(c_side, "node", "left")
@@ -195,66 +187,39 @@ def pagerank(
             )
         )
 
-    # loop-state conf window (r9): per-round frames are node-domain rows
-    # (see util.iterative_loop_conf; no-op past the broadcast budget)
-    from pipeline_pyspark_etl_imdb_spark.operators.util import (
-        iterative_loop_conf,
-        record_prechk,
-    )
+    if tol is None:
+        ranks = fixed_rounds(
+            ranks,
+            lambda frames: _step(frames[-1]),
+            n_iter,
+            name="pagerank",
+            rows=n,
+            bcast=bcast,
+        )[-1]
+    else:
 
-    intermediates: list[DataFrame] = []
-    with iterative_loop_conf(spark, n, bcast=bcast):
-        for _ in range(n_iter):
-            old = ranks
-            # LAZY checkpoint: no per-round action in the fixed-count
-            # regime — the chain materializes when the caller's action
-            # (or the tol delta below) runs; each checkpoint truncates
-            # lineage so round N's Catalyst plan stays O(1)
-            ranks = record_prechk(_step(ranks)).localCheckpoint(eager=False)
-            intermediates.append(ranks)
-            last_n_rounds += 1
-            converged = False
-            if tol is not None:
-                # both frames are checkpointed node-keyed rows (n small vs
-                # edges); one broadcast-able join + scalar max per round —
-                # the tol regime keeps the per-round action by necessity
-                o_side = old.select("node", F.col("rank").alias("__old"))
-                if bcast:
-                    o_side = F.broadcast(o_side)
-                delta = (
-                    ranks.join(o_side, "node")
-                    .agg(F.max(F.abs(F.col("rank") - F.col("__old"))).alias("d"))
-                    .first()
-                    .d
-                )
-                converged = delta is not None and delta < tol
-            if converged:
-                break
-        # ONE action materializes the whole lazy checkpoint chain (every
-        # round's stages inside one job) — and it must run BEFORE the edge
-        # and node caches are released, or the chain would rebuild the edge
-        # subtree from the caller's plan once per round
-        ranks.count()
+        def _tol_step(r: DataFrame, _) -> tuple[DataFrame, Column]:
+            # changed = the nodes that moved by tol or more: zero changed
+            # is exactly max |delta rank| < tol
+            o_side = r.select("node", F.col("rank").alias("__old"))
+            if bcast:
+                o_side = F.broadcast(o_side)
+            stepped = _step(r).join(o_side, "node")
+            return stepped, F.abs(F.col("rank") - F.col("__old")) >= tol
+
+        ranks = converge(
+            ranks,
+            _tol_step,
+            name="pagerank",
+            max_iter=n_iter,
+            rows=n,
+            bcast=bcast,
+            raise_at_cap=False,
+        )
     edges_deg.unpersist()
     if bcast:
         nodes.unpersist()
     nodes0.unpersist()
-    # every intermediate round's checkpoint blocks are still cached
-    # (DataFrame.unpersist is a no-op for local checkpoints — the blocks
-    # are RDD-level); release all but the returned frame so a long
-    # shared-JVM session (239-query bench) doesn't accumulate n_iter
-    # node-sized block sets per call
-    from pipeline_pyspark_etl_imdb_spark.operators.util import (
-        defer_checkpoint_release,
-        release_local_checkpoint,
-    )
-
-    for inter in intermediates:
-        if inter is not ranks:
-            release_local_checkpoint(inter)
-    # the final round's checkpoint backs the returned frame — registered
-    # for the harness's next release_tracked(), else it leaks per call
-    defer_checkpoint_release(ranks)
     return ranks.select("node", "rank")
 
 

@@ -34,10 +34,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pipeline_pyspark_etl_imdb_spark.operators.util import (
-    eager_checkpoint,
+from pipeline_pyspark_etl_imdb_spark.operators.loop import (
     iterative_loop_conf,
+    last_rounds,
 )
+from pipeline_pyspark_etl_imdb_spark.operators.util import eager_checkpoint
 
 # 4096-ary narrowing: a cents-scaled price range (~5e9) resolves in 3
 # rounds instead of 5 at 256-ary, and the per-round driver collect is
@@ -70,13 +71,31 @@ def _pin_if_shuffle_upstream(df: DataFrame) -> DataFrame:
     window's narrow width with AQE's skew handling off, every round — the
     scale hazard ADVICE r9 flagged. Pin exactly those plans with ONE
     eager checkpoint, outside the window; broadcast-only joins stream
-    map-side and need no pin."""
+    map-side and need no pin.
+
+    The test walks the PREPARED physical plan's node tree (under AQE its
+    initial plan, which already holds the exchanges EnsureRequirements
+    inserted) for a ShuffleExchangeExec of origin ENSURE_REQUIREMENTS —
+    the shuffles a join or aggregation needs. A caller's own
+    repartition() is a layout choice, not an upstream computation, and a
+    persisted input's shuffles sit inside its cache, which the walk does
+    not enter: neither is pinned."""
     try:
-        plan = df._jdf.queryExecution().sparkPlan().toString()
+        plan = df._jdf.queryExecution().executedPlan()
+        if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+            plan = plan.initialPlan()
+        todo, shuffled = [plan], False
+        while todo and not shuffled:
+            node = todo.pop()
+            shuffled = (
+                node.getClass().getSimpleName() == "ShuffleExchangeExec"
+                and node.shuffleOrigin().toString() == "ENSURE_REQUIREMENTS"
+            )
+            children = node.children()
+            todo.extend(children.apply(i) for i in range(children.size()))
     except Exception:  # pragma: no cover - defensive: pin on doubt
         return eager_checkpoint(df)
-    shuffles = plan.count("Exchange ") - plan.count("BroadcastExchange ")
-    return eager_checkpoint(df) if shuffles > 0 else df
+    return eager_checkpoint(df) if shuffled else df
 
 
 def _bucket_expr(col: str, lo: int, width: int, hi: int):
@@ -95,13 +114,6 @@ def _bucket_expr(col: str, lo: int, width: int, hi: int):
     )
 
 
-# histogram rounds executed by the most recent exact_kth call — lets the
-# property suite assert the O(log_N range) bound without counting Spark
-# jobs (AQE splits one query into several jobs; same pattern as
-# pagerank.last_n_rounds)
-last_n_rounds: int = 0
-
-
 def _exact_kth_full(
     values: DataFrame,
     k: int,
@@ -116,8 +128,9 @@ def _exact_kth_full(
     target rank WITHIN it — callers can then answer adjacent-rank
     questions (the even-median (k+1)-th value) without another job.
     finish_counts is None when the walk resolved by width-1 narrowing."""
-    global last_n_rounds
-    last_n_rounds = 0
+    # histogram rounds go to the loop round record, so the property suite
+    # can assert the O(log_N range) bound without counting Spark jobs
+    last_rounds["exact_kth"] = 0
     values = _pin_if_shuffle_upstream(values)
     if lo is None or hi is None:
         row = values.agg(F.min(col).alias("lo"), F.max(col).alias("hi")).collect()[0]
@@ -126,7 +139,7 @@ def _exact_kth_full(
     # most N_BUCKETS (or FINISH_ROWS) aggregate rows — a data-INDEPENDENT
     # bound, so the window always engages; AQE's per-round query-stage
     # jobs and the session-width exchange were pure scheduling latency
-    # (see util.iterative_loop_conf)
+    # (see loop.iterative_loop_conf)
     with iterative_loop_conf(values.sparkSession, N_BUCKETS, bcast=True):
         return _exact_kth_walk(values, k, col, lo, hi, n_range)
 
@@ -139,9 +152,8 @@ def _exact_kth_walk(
     hi: int,
     n_range: int | None,
 ) -> tuple[int, list[tuple[int, int]] | None, int]:
-    global last_n_rounds
     while lo < hi:
-        last_n_rounds += 1
+        last_rounds["exact_kth"] += 1
         if n_range is not None and n_range <= FINISH_ROWS:
             cnts = sorted(
                 (int(r[col]), int(r["n"]))
@@ -310,7 +322,7 @@ def grouped_multi_kth_full(
     active = {gt for gt, s in state.items() if s["lo"] < s["hi"]}
     # narrowing-walk conf window (r9): per-round shuffles are bounded by
     # groups x tags x N_BUCKETS aggregate rows — data-independent, so the
-    # window always engages (see util.iterative_loop_conf / _exact_kth_full)
+    # window always engages (see loop.iterative_loop_conf / _exact_kth_full)
     with iterative_loop_conf(spark, len(state) * N_BUCKETS, bcast=True):
         _grouped_walk(vals, spark, state, fin, active)
     return {gt: s["lo"] for gt, s in state.items()}, fin

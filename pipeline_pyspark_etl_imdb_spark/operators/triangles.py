@@ -189,12 +189,15 @@ def _closed_triangles(
         # shuffle is a node-domain count collapsing to a 1-row max
         # (isolated A/B: 0.95 s with AQE stage jobs, 0.35 s windowed;
         # persisting deg here measured SLOWER — cache build overhead —
-        # so the frame stays lazy).
-        from pipeline_pyspark_etl_imdb_spark.operators.util import (
+        # so the frame stays lazy). The window is sized from the edge
+        # count (it bounds the node domain) and, like the loops', is a
+        # no-op past the broadcast budget, where AQE's skew handling
+        # stays on for a graph that large.
+        from pipeline_pyspark_etl_imdb_spark.operators.loop import (
             iterative_loop_conf,
         )
 
-        with iterative_loop_conf(edges.sparkSession, 1, bcast=True):
+        with iterative_loop_conf(edges.sparkSession, n_edges, bcast=small):
             mx = deg.agg(F.max("deg").alias("mx")).collect()[0]["mx"] or 0
         degree_ordered = int(mx) * int(mx) > 4 * n_edges
     if degree_ordered:

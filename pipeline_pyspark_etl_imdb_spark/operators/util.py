@@ -2,9 +2,7 @@
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 # Persisted subtrees registered by operators (ANN indexes, LSH bases,
 # candidate sets). A query result is lazy, so the operator itself can't
@@ -124,69 +122,6 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
-
-
-@contextmanager
-def iterative_loop_conf(
-    spark: SparkSession, n_rows: int, *, bcast: bool, width: int | None = None
-):
-    """Size the shuffle width to the LOOP-STATE frame (and pause AQE)
-    while a driver-controlled iterative loop builds and materializes its
-    round plans — restore on exit.
-
-    Iterative operators (pagerank, BFS/SSSP, LPA, k-core) run R rounds
-    whose per-round frames are NODE-DOMAIN-sized, orders of magnitude
-    smaller than the data the session's shuffle width was sized for. Two
-    fixed costs then dominate every round (measured r9, sf0.1, job-count
-    + wall A/B):
-
-    - each in-loop Exchange at the session width launches shuffle_n
-      tasks to move a few-MB frame (task dispatch, not data);
-    - AQE materializes every such Exchange as its OWN query-stage job —
-      R rounds x stages/round of scheduling latency — to re-plan
-      single-digit-MB exchanges whose size is already known by
-      construction.
-
-    Inside the window the width comes from the measured loop-state row
-    count (``max(2, min(session_width, n_rows // 100_000 + 1))`` — the
-    frame-proportional formula pagerank/k-core already use for their
-    coalesces) and AQE is off. Measured: copurchase_sssp 6.1-6.5 s ->
-    2.5-2.9 s, copurchase_bfs_hops 3.4-3.8 s -> 2.2-2.5 s,
-    copurchase_communities ~4 s -> ~2.3-2.5 s.
-
-    SCALE GUARD: the window only narrows under ``bcast=True`` — the same
-    broadcast-budget predicate the loop joins use — so it engages exactly
-    when the loop state is provably bounded (n <= broadcast_max_nodes,
-    i.e. tens of MB at most); the formula saturates to the session width
-    as n grows. In the shuffle-fallback regime (billion-node graphs) the
-    window is a no-op: AQE (skew splitting, runtime re-planning) and the
-    full session width stay in force. This is data-proportional sizing,
-    not a local-mode constant: on a cluster a 20k-node loop gets the
-    same narrow width, and a 2M-node loop the session's.
-
-    The conf changes are session-scoped for the window's duration —
-    callers are the engine's single-threaded operator constructors, and
-    every frame the operator RETURNS is checkpoint-materialized inside
-    the window, so no outer plan compiles against the narrowed conf.
-    """
-    if not bcast:
-        yield
-        return
-    shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if width is None:
-        width = max(2, min(shuffle_n, n_rows // 100_000 + 1))
-    # ``width``: a caller that pins a persisted frame consumed by every
-    # round (CC's symmetrized edge list) passes the SAME width it pinned
-    # at, so in-loop exchanges land on the pinned layout instead of
-    # re-exchanging it each round (the r9 CC attempt's failure mode)
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(width))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_n))
 
 
 def release_local_checkpoint(df: DataFrame) -> None:

@@ -61,13 +61,13 @@ def test_pagerank_tol_early_exit(spark):
     """A directed 4-cycle's fixpoint IS the uniform init, so round 1's
     delta is 0 and the tol exit must fire immediately — with the result
     matching a NumPy run under the same stopping rule."""
-    from pipeline_pyspark_etl_imdb_spark.operators import pagerank as pr_mod
+    from pipeline_pyspark_etl_imdb_spark.operators.loop import last_rounds
 
     cycle = [(0, 1), (1, 2), (2, 3), (3, 0)]
     edges = spark.createDataFrame(cycle, ["src", "dst"])
     got = {r["node"]: r["rank"] for r in pagerank(edges, n_iter=10, tol=1e-9).collect()}
     expected, np_rounds = _numpy_pagerank(cycle, n_iter=10, tol=1e-9)
-    assert pr_mod.last_n_rounds == np_rounds == 1
+    assert last_rounds["pagerank"] == np_rounds == 1
     for v, exp in expected.items():
         assert got[v] == pytest.approx(exp, abs=1e-12), f"node {v}"
 
@@ -75,12 +75,12 @@ def test_pagerank_tol_early_exit(spark):
 def test_pagerank_fixed_count_ignores_tol_none(spark):
     """tol=None (the default and the fixture query's mode) runs all
     n_iter rounds even on an instantly-converged graph."""
-    from pipeline_pyspark_etl_imdb_spark.operators import pagerank as pr_mod
+    from pipeline_pyspark_etl_imdb_spark.operators.loop import last_rounds
 
     cycle = [(0, 1), (1, 2), (2, 0)]
     edges = spark.createDataFrame(cycle, ["src", "dst"])
     pagerank(edges, n_iter=3).collect()
-    assert pr_mod.last_n_rounds == 3
+    assert last_rounds["pagerank"] == 3
 
 
 def test_pagerank_mass_conserved(ranks):

@@ -4,6 +4,7 @@ edge semantics the fixture can't reach (even/odd counts, duplicates
 across the middle, degenerate ranges) and agreement with Spark's own
 exact percentile aggregate."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from pipeline_pyspark_etl_imdb_spark.operators.selection import (
@@ -212,3 +213,40 @@ def test_grouped_mad_per_group_yardsticks(spark):
     assert ("calm", 900) in flagged
     assert ("wild", 901) not in flagged
     assert not any(g == "flat" for g, _ in flagged)
+
+
+@pytest.mark.parametrize("aqe", ["true", "false"])
+def test_pin_guard_pins_only_required_shuffles(spark, tmp_path, aqe):
+    """The walk re-runs its input every round inside the narrow window,
+    so exactly the inputs whose plan needs an inserted shuffle (join,
+    aggregation) are pinned once; a scan or the caller's own bare
+    repartition is not. Both AQE settings (initial vs executed plan)."""
+    from pipeline_pyspark_etl_imdb_spark.operators.selection import (
+        _pin_if_shuffle_upstream,
+    )
+    from pipeline_pyspark_etl_imdb_spark.operators.util import release_tracked
+
+    spark.range(200).select(
+        (F.col("id") % 7).alias("k"), F.col("id").alias("c")
+    ).write.parquet(str(tmp_path / "t"))
+    old = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    try:
+        scan = spark.read.parquet(str(tmp_path / "t"))
+        joined = (
+            scan.join(scan.select("k", F.col("c").alias("c2")), "k")
+            .groupBy("k")
+            .agg(F.sum("c2").alias("c"))
+        )
+        pins = {
+            name: _pin_if_shuffle_upstream(df) is not df
+            for name, df in [
+                ("scan", scan),
+                ("join+groupBy", joined),
+                ("repartition", scan.repartition(4)),
+            ]
+        }
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", old)
+        release_tracked()
+    assert pins == {"scan": False, "join+groupBy": True, "repartition": False}

@@ -95,14 +95,14 @@ def test_exact_kth_round_count_is_log_bounded(spark):
     percentile()'s per-group value buffers at 100 TB."""
     import math
 
-    from pipeline_pyspark_etl_imdb_spark.operators import selection
+    from pipeline_pyspark_etl_imdb_spark.operators.loop import last_rounds
 
     values = [-(2**62), -17, 0, 5, 2**61, 2**62]
     df = spark.createDataFrame([(v,) for v in values], "c bigint")
     assert exact_kth(df, 3) == 0
     value_range = 2**63
     max_rounds = math.ceil(math.log(value_range, N_BUCKETS))
-    assert 1 <= selection.last_n_rounds <= max_rounds, (
-        f"{selection.last_n_rounds} rounds for a {value_range} range "
+    assert 1 <= last_rounds["exact_kth"] <= max_rounds, (
+        f"{last_rounds['exact_kth']} rounds for a {value_range} range "
         f"(expected <= {max_rounds})"
     )
